@@ -13,6 +13,7 @@ pushdown reach the scan. Never materialize here.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +53,10 @@ _NS_TIMESTAMP_COLS = {"events": ("ts",)}
 # addPyFile re-ship (ADVICE r02, catalog.py:88). applicationId is unique
 # per context lifetime.
 _SHIPPED_CONTEXTS: set[str] = set()
+# Concurrent first calls (e.g. a snapshot's per-table threads in a fresh
+# session) must build and ship the zip exactly once: two addPyFile calls
+# of differing zips fail with "File ... exists and does not match contents".
+_SHIP_LOCK = threading.Lock()
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -64,18 +69,24 @@ def _ship_package(spark: SparkSession) -> None:
     cwd=/root/repo (local-mode workers inherit the cwd), but an
     externally-launched driver may run anywhere — so ship a zip of the
     package via addPyFile once per SparkContext (SparkFiles paths are
-    prepended to worker sys.path per task)."""
-    sc = spark.sparkContext
-    if sc.applicationId in _SHIPPED_CONTEXTS:
-        return
-    import tempfile
-    import zipfile
+    prepended to worker sys.path per task).
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"dps_spark_pkg_{sc.applicationId.replace(':', '_')}.zip"
-    )
-    if not os.path.exists(zip_path):
+    The zip is built in a subdirectory of the context's SparkFiles root,
+    which Spark deletes when the context stops, so nothing outlives the
+    session (addPyFile copies it into the root itself, hence the
+    subdirectory)."""
+    sc = spark.sparkContext
+    with _SHIP_LOCK:
+        if sc.applicationId in _SHIPPED_CONTEXTS:
+            return
+        import zipfile
+
+        from pyspark import SparkFiles
+
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        build_dir = os.path.join(SparkFiles.getRootDirectory(), "dps_spark_pkg_build")
+        os.makedirs(build_dir, exist_ok=True)
+        zip_path = os.path.join(build_dir, "dps_spark_pkg.zip")
         with zipfile.ZipFile(zip_path, "w") as zf:
             for root, _dirs, files in os.walk(pkg_dir):
                 for fn in files:
@@ -85,17 +96,17 @@ def _ship_package(spark: SparkSession) -> None:
                             "datapipeline_scripts_spark", os.path.relpath(full, pkg_dir)
                         )
                         zf.write(full, rel)
-    try:
-        sc.addPyFile(zip_path)
-    except Exception as exc:  # e.g. Spark Connect without addPyFile
-        # cwd fallback applies, but a silent swallow would mask worker
-        # ImportErrors under a foreign-cwd driver — log it (ADVICE r02)
-        import logging
+        try:
+            sc.addPyFile(zip_path)
+        except Exception as exc:  # e.g. Spark Connect without addPyFile
+            # cwd fallback applies, but a silent swallow would mask worker
+            # ImportErrors under a foreign-cwd driver — log it (ADVICE r02)
+            import logging
 
-        logging.getLogger(__name__).warning(
-            "addPyFile(%s) failed (%s); workers rely on cwd fallback", zip_path, exc
-        )
-    _SHIPPED_CONTEXTS.add(sc.applicationId)
+            logging.getLogger(__name__).warning(
+                "addPyFile(%s) failed (%s); workers rely on cwd fallback", zip_path, exc
+            )
+        _SHIPPED_CONTEXTS.add(sc.applicationId)
 
 
 def ensure_session_conf(spark: SparkSession) -> None:

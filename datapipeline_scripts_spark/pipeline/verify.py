@@ -13,6 +13,8 @@ A19/A20 are made real: `include`/`exclude` restore only listed tables
 matches a regex — applied *for real*, unlike the reference's dead sed
 filters (the `-f`-already-wrote-the-file bug at
 /root/reference/psql-backups.sh:146-148; SURVEY §2.A A20).
+The dropped rows are counted by an observation on the scratch write,
+not a job of their own.
 """
 
 from __future__ import annotations
@@ -22,10 +24,10 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
-from datapipeline_scripts_spark.pipeline.snapshot import MANIFEST_NAME, content_hash
+from datapipeline_scripts_spark.pipeline.snapshot import MANIFEST_NAME, fingerprint, run_per_table
 
 
 class RestoreVerifyError(RuntimeError):
@@ -64,40 +66,45 @@ def verify_snapshot(
     if include is not None:  # A19 restore-list filtering
         tables = [t for t in tables if t in include]
     tables = [t for t in tables if t not in exclude]
+
+    def _verify_table(name: str) -> str | None:
+        """Restore one table into the scratch warehouse; return the
+        issue found, or None."""
+        expect = manifest["tables"][name]
+        # incremental snapshots point unchanged tables at the base
+        # snapshot ("based_on") instead of re-writing their data
+        data_dir = snapshot_dir
+        if "based_on" in expect:
+            data_dir = os.path.join(os.path.dirname(snapshot_dir.rstrip("/")), expect["based_on"])
+        src = spark.read.parquet(os.path.join(data_dir, name))
+        obs = None
+        if drop_line_pattern and name in drop_line_pattern:
+            col, pattern = drop_line_pattern[name]
+            # NULLs must be KEPT (and not counted as dropped): a bare
+            # ~rlike filters NULL rows out silently, which made the
+            # rows == expect - dropped check spuriously fail (ADVICE r01)
+            matches = F.col(col).isNotNull() & F.col(col).rlike(pattern)
+            obs = Observation()
+            src = src.observe(obs, F.count_if(matches).alias("dropped")).filter(~matches)
+        target = os.path.join(scratch_dir, name)
+        src.write.mode("error").parquet(target)  # abort-on-first-error
+        dropped = obs.get["dropped"] if obs is not None else 0
+        restored = spark.read.parquet(target)
+        n, h = fingerprint(restored)
+        if n != expect["n_rows"] - dropped:
+            return f"{name}: rows {n} != manifest {expect['n_rows']} - dropped {dropped}"
+        if restored.schema.json() != expect["schema"]:
+            return f"{name}: schema drift"
+        if dropped == 0 and h != expect["content_hash"]:
+            return f"{name}: content hash {h} != {expect['content_hash']}"
+        return None
+
     try:
-        for name in tables:
-            expect = manifest["tables"][name]
-            # incremental snapshots point unchanged tables at the base
-            # snapshot ("based_on") instead of re-writing their data
-            data_dir = snapshot_dir
-            if "based_on" in expect:
-                data_dir = os.path.join(os.path.dirname(snapshot_dir.rstrip("/")), expect["based_on"])
-            src = spark.read.parquet(os.path.join(data_dir, name))
-            dropped = 0
-            if drop_line_pattern and name in drop_line_pattern:
-                col, pattern = drop_line_pattern[name]
-                # NULLs must be KEPT (and not counted as dropped): a bare
-                # ~rlike filters NULL rows out silently, which made the
-                # rows == expect - dropped check spuriously fail (ADVICE r01)
-                matches = F.col(col).isNotNull() & F.col(col).rlike(pattern)
-                dropped = src.filter(matches).count()
-                src = src.filter(~matches)
-            target = os.path.join(scratch_dir, name)
-            src.write.mode("error").parquet(target)  # abort-on-first-error
-            restored = spark.read.parquet(target)
-            n = restored.count()
-            if n != expect["n_rows"] - dropped:
-                result.issues.append(f"{name}: rows {n} != manifest {expect['n_rows']} - dropped {dropped}")
-                continue
-            if restored.schema.json() != expect["schema"]:
-                result.issues.append(f"{name}: schema drift")
-                continue
-            if dropped == 0:
-                h = content_hash(restored.select(sorted(restored.columns)))
-                if h != expect["content_hash"]:
-                    result.issues.append(f"{name}: content hash {h} != {expect['content_hash']}")
-                    continue
-            result.tables_ok.append(name)
+        for name, issue in zip(tables, run_per_table(spark, tables, _verify_table)):
+            if issue is None:
+                result.tables_ok.append(name)
+            else:
+                result.issues.append(issue)
     finally:
         if not keep_scratch:
             shutil.rmtree(scratch_dir, ignore_errors=True)  # A4/A22 cleanup

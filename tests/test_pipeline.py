@@ -5,16 +5,27 @@ from __future__ import annotations
 
 import json
 import os
+import sys
+import threading
+import uuid
+import zipfile
 
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
+import datapipeline_scripts_spark.pipeline.snapshot as snap_mod
+from datapipeline_scripts_spark import catalog
 from datapipeline_scripts_spark.pipeline.config import JobConfig, clamp_identifier, scratch_password
 from datapipeline_scripts_spark.pipeline.retrying import PollTimeout, RetriesExhausted, poll, retry
 from datapipeline_scripts_spark.pipeline.snapshot import (
     CHECKINS_NAME,
+    LOCK_NAME,
     MANIFEST_NAME,
     SnapshotLockError,
+    SnapshotMismatchError,
     _acquire_lock,
+    fingerprint,
     snapshot,
 )
 from datapipeline_scripts_spark.pipeline.verify import RestoreVerifyError, verify_or_raise, verify_snapshot
@@ -229,15 +240,121 @@ def test_config_env_defaults(monkeypatch):
     assert cfg.service_name == "svc-from-env"
 
 
-def test_snapshot_parallel_matches_sequential(spark, sf_dir, snap_dir, tmp_path):
-    # driver-side thread pool must yield the same manifest content as
-    # the sequential path (same hashes/rows/schemas), just faster
-    root = str(tmp_path / "psnap")
-    pdir = snapshot(
-        spark, sf_dir, root, cfg=_cfg(), snapshot_ts="2026_01_02_000000", max_workers=3
+def _reference_hash(df) -> int:
+    # the content-hash formula manifests have always recorded, as one
+    # plain aggregate: Σ xxhash64 over the sorted, string-cast columns
+    # in decimal(38,0), mod 2^64
+    row_hash = F.xxhash64(*[F.col(c).cast("string") for c in sorted(df.columns)])
+    out = df.agg(F.sum(row_hash.cast("decimal(38,0)"))).collect()[0][0]
+    return int(out) % (1 << 64) if out is not None else 0
+
+
+def test_manifest_matches_reference_fingerprints(spark, sf_dir, tmp_path):
+    # manifests written by the observed fingerprint keep the old values,
+    # so snapshots taken before it still verify: rows from the parquet
+    # footers, content hash from the reference aggregate over the source
+    tables = ("region", "nation", "supplier", "orders", "events")
+    cfg = JobConfig(service_name="compat", env_name="test", tables=tables)
+    sdir = snapshot(spark, sf_dir, str(tmp_path / "compat"), cfg=cfg, partition_cols={"orders": ["o_orderstatus"]})
+    with open(os.path.join(sdir, MANIFEST_NAME)) as fh:
+        entries = json.load(fh)["tables"]
+    assert list(entries) == list(tables)
+    for name in tables:
+        assert entries[name]["n_rows"] == pq.ParquetFile(catalog.table_path(sf_dir, name)).metadata.num_rows
+        assert entries[name]["content_hash"] == _reference_hash(catalog.load_table(spark, sf_dir, name))
+
+
+def test_fingerprint_of_empty_table(spark):
+    assert fingerprint(spark.createDataFrame([], "a INT, b STRING")) == (0, 0)
+
+
+def _jobs_in_group(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_job_budget_per_table(spark, sf_dir, tmp_path):
+    # at most 4 Spark jobs per table and call (load, write with the
+    # observed source fingerprint, read back, fingerprint); counting by
+    # job group also proves the group reaches the per-table threads
+    tables = ("orders", "lineitem", "events")
+    cfg = JobConfig(service_name="budget", env_name="test", tables=tables)
+    sdir, n_snap = _jobs_in_group(
+        spark, f"budget-snapshot-{uuid.uuid4()}", lambda: snapshot(spark, sf_dir, str(tmp_path / "b"), cfg=cfg)
     )
-    with open(os.path.join(pdir, MANIFEST_NAME)) as fh:
-        par = json.load(fh)["tables"]
-    with open(os.path.join(snap_dir, MANIFEST_NAME)) as fh:
-        seq = json.load(fh)["tables"]
-    assert par == seq
+    result, n_verify = _jobs_in_group(
+        spark, f"budget-verify-{uuid.uuid4()}", lambda: verify_snapshot(spark, sdir, str(tmp_path / "bs"))
+    )
+    assert result.ok, result.issues
+    assert 0 < n_snap <= 4 * len(tables)
+    assert 0 < n_verify <= 4 * len(tables)
+
+
+def test_snapshot_refuses_restore_mismatch(spark, tmp_path, monkeypatch):
+    # partition inference reads the string partition values "001", "010",
+    # "100" back as INT 1, 10, 100: the written snapshot would not restore
+    # its source, so the snapshot must fail and leave no artifact
+    src = str(tmp_path / "src" / "t")
+    spark.createDataFrame([(1, "001"), (2, "010"), (3, "100")], "id INT, k STRING").write.parquet(src)
+    monkeypatch.setattr(snap_mod.catalog, "load_table", lambda sp, d, n: sp.read.parquet(src))
+    out = str(tmp_path / "out")
+    cfg = JobConfig(service_name="mismatch", env_name="test", tables=("t",))
+    with pytest.raises(SnapshotMismatchError, match="snapshot of t"):
+        snapshot(spark, str(tmp_path / "src"), out, cfg=cfg, snapshot_ts="night1", partition_cols={"t": ["k"]})
+    snap_root = os.path.join(out, cfg.snapshot_prefix())
+    assert not os.path.exists(os.path.join(snap_root, LOCK_NAME))
+    assert not os.path.exists(os.path.join(snap_root, CHECKINS_NAME))
+    assert not os.path.exists(os.path.join(snap_root, "night1", MANIFEST_NAME))
+    assert not os.path.exists(os.path.join(snap_root, "night1"))
+
+
+def test_ship_package_ships_once_under_threads(monkeypatch, tmp_path):
+    # concurrent first calls (a snapshot's table threads in a fresh
+    # session) must build and ship the package zip exactly once
+    from pyspark import SparkFiles
+
+    shipped: list[str] = []
+
+    class StubContext:
+        applicationId = f"stub-{uuid.uuid4()}"
+
+        def addPyFile(self, path: str) -> None:
+            shipped.append(path)
+
+    class StubSession:
+        sparkContext = StubContext()
+
+    monkeypatch.setattr(SparkFiles, "getRootDirectory", classmethod(lambda cls: str(tmp_path)))
+    barrier = threading.Barrier(8, timeout=30)
+    errors: list[Exception] = []
+
+    def call() -> None:
+        try:
+            barrier.wait()
+            catalog._ship_package(StubSession())
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=call) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(shipped) == 1
+    assert shipped[0].startswith(str(tmp_path))
+    with zipfile.ZipFile(shipped[0]) as zf:
+        assert zf.testzip() is None
+        assert "datapipeline_scripts_spark/catalog.py" in zf.namelist()
